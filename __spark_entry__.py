@@ -497,12 +497,14 @@ def _q_corpus_pack(spark, sf_dir):
     # global shuffle -> concatenate-and-cut packing at a 128-token
     # budget. Small bucket knobs (64 rank buckets, 256-row pack
     # buckets) so the multi-bucket offset paths are exercised at gate
-    # scale, not just the single-bucket degenerate. r7: built through
-    # plans/corpus (identical chain - the chunked-unmixed shuffle key
-    # is the same concat_ws("#", doc_id, chunk_id), same seeds/knobs -
-    # so identical rows) to inherit the pipeline's chunk-frame pin:
-    # the manual composition re-derived chunking four times (shuffle's
-    # count branch + rank branch, pack's offsets + payload).
+    # scale, not just the single-bucket degenerate. Built through
+    # plans/corpus so the chunk -> shuffle -> pack chain has one shared
+    # implementation (same chunked-unmixed shuffle key
+    # concat_ws("#", doc_id, chunk_id), seeds and knobs as a manual
+    # composition, so identical rows). No chunk-frame pin applies to
+    # this config: the pipeline pins only behind a dedup, substrings
+    # or decontaminate step, and a bare scan + chunk re-derives faster
+    # than a persist encodes (measured, see plans/corpus).
     d = _widen(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     cfg = {"chunk": {"max_tokens": 40, "overlap": 8},
            "shuffle": {"seed": 13, "n_buckets": 64},

@@ -80,23 +80,6 @@ def points_in_polygon_batch(px: np.ndarray, py: np.ndarray,
     return out
 
 
-def polygon_area(poly: np.ndarray) -> float:
-    """Signed shoelace area of a flat ring."""
-    xs, ys = poly[0::2], poly[1::2]
-    x1, y1 = np.roll(xs, -1), np.roll(ys, -1)
-    return float(0.5 * np.sum(xs * y1 - x1 * ys))
-
-
-def buffer_bbox(poly: np.ndarray, radius: float) -> np.ndarray:
-    """Axis-aligned bbox of the polygon grown by `radius` (planar units),
-    as a flat rectangle ring. Semantics analog of the reference's feature
-    buffer-with-bounds (ee_data.py:1187-1196 `buffer_features(..., bounds)`).
-    """
-    x0, y0, x1, y1 = polygon_bbox(poly)
-    x0, y0, x1, y1 = x0 - radius, y0 - radius, x1 + radius, y1 + radius
-    return np.array([x0, y0, x1, y0, x1, y1, x0, y1], dtype=np.float64)
-
-
 def rect_ring(x0: float, y0: float, x1: float, y1: float) -> np.ndarray:
     """Rectangle as a flat ring (ccw)."""
     return np.array([x0, y0, x1, y0, x1, y1, x0, y1], dtype=np.float64)

@@ -114,8 +114,3 @@ def cloud_percentage_filter(df, percentage: float,
     """Metadata cloud filter (ee_data.py:205-212 S2 `< p`; the Landsat
     variant additionally requires CLOUD_COVER >= 0, ee_data.py:291-296)."""
     return df.filter(F.col(col) < percentage)
-
-
-def landsat_cloud_percentage_filter(df, percentage: float,
-                                    col: str = "CLOUD_COVER"):
-    return df.filter((F.col(col) >= 0) & (F.col(col) < percentage))

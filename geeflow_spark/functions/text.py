@@ -31,17 +31,6 @@ def token_count(text: Column) -> Column:
             .otherwise(F.size(F.split(t, r"\s+")))
 
 
-def bpe_ish_token_count(text: Column) -> Column:
-    """Subword-ish token count: splits on whitespace AND
-    letter/digit/punctuation boundaries (a cheap BPE proxy)."""
-    t = F.regexp_replace(text, r"([0-9]+|[^\sA-Za-z0-9])", r" $1 ")
-    return token_count(t)
-
-
-def char_count(text: Column) -> Column:
-    return F.length(text)
-
-
 def punct_ratio(text: Column) -> Column:
     """Fraction of characters that are punctuation."""
     n = F.length(text)

@@ -87,20 +87,6 @@ def get_date_ranges(start, n: int, months: int = 0, months_skip: int = 0,
                                            days=days)]
 
 
-def get_date_ranges_from_year(data, *, year_key: str = "",
-                              date_key: str = "", **kwargs):
-    """Ranges anchored at a per-item year or date column
-    (times.py:102-109)."""
-    assert bool(year_key) != bool(date_key), "Year or date key must be set."
-    if year_key:
-        return get_date_ranges(f"{data[year_key]}-01-01", **kwargs)
-    return get_date_ranges(data[date_key], **kwargs)
-
-
-def get_date_from_year(data, year_key: str, add_years: int = 0) -> str:
-    return f"{int(data[year_key]) + add_years}-01-01"
-
-
 def adjust_for_hemisphere(data, north, south):
     """Hemisphere-dependent config value (times.py:117-121)."""
     return north if data["lat"] >= 0 else south
@@ -115,8 +101,3 @@ def outer_dates(date_ranges, to_str=True):
     if to_str:
         return to_datestr(min(dates)), to_datestr(max(dates))
     return min(dates), max(dates)
-
-
-def date_range_mean_ms(start_ms: float, end_ms: float) -> float:
-    """(start+end)/2 in millis (times.py:134-136 ee variant)."""
-    return (start_ms + end_ms) / 2.0

@@ -30,8 +30,6 @@ from __future__ import annotations
 
 from collections.abc import Callable, Sequence
 
-import threading
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
@@ -39,30 +37,26 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
+from geeflow_spark import pins
+from geeflow_spark.pins import Pins
+
 _MERSENNE = (1 << 61) - 1
 
-# Candidate-pair caches still live from prior minhash_duplicate_pairs
-# calls; the next call unpersists them (bounded cache growth in
-# long-lived sessions). Guarded by a lock so concurrent jobs in one
-# session can't corrupt the list; see release_candidate_caches() and the
-# lifetime contract in minhash_duplicate_pairs' docstring.
-_live_candidate_caches: list = []
-_cache_lock = threading.Lock()
+# Owners of the pins that outlive a call (geeflow_spark/pins.py).
+_CANDIDATES = "dedup.candidates"
+_COMPONENT_LABELS = "dedup.component_labels"
+_SURVIVORS = "dedup.survivors"
+_DECONTAMINATE = "dedup.decontaminate"
 
 
 def release_candidate_caches() -> None:
-    """Unpersists candidate-pair caches from prior
-    minhash_duplicate_pairs calls AND the occurrence caches of prior
-    substring_dedup / containment_pairs calls. Called automatically at
-    the start of each new call; callers that keep many results live
-    concurrently can instead call this explicitly when done with ALL
-    of them. Releases here are recompute-safe: a released result stays
-    correct, it just recomputes per action."""
-    with _cache_lock:
-        while _live_candidate_caches:
-            _live_candidate_caches.pop().unpersist(blocking=False)
-        while _live_occurrence_caches:
-            _live_occurrence_caches.pop().unpersist(blocking=False)
+    """Unpersists the candidate-pair and shingle caches of the last
+    minhash_duplicate_pairs call. Called automatically at the start of
+    each new call; callers that keep many results live concurrently
+    can instead call this explicitly when done with ALL of them.
+    Releases here are recompute-safe: a released result stays correct,
+    it just recomputes per action."""
+    pins.release(_CANDIDATES)
 
 
 # NOTE (r7): persisting the occurrence/posting frames of
@@ -74,7 +68,6 @@ def release_candidate_caches() -> None:
 # CPU re-pass for corpus-token-count x 24 bytes of storage traffic.
 # Both consumers re-derive the occurrence pipeline; the skew-safe
 # partial-aggregated count + AQE-splittable join-back stands.
-_live_occurrence_caches: list = []
 
 
 def _token_shingles(text: str, k: int) -> set:
@@ -557,12 +550,9 @@ def minhash_duplicate_pairs(df: DataFrame, text_col: str = "text",
     # cache (recompute-per-action) once a newer call runs; callers that
     # interleave several live results should finish consuming each
     # before the next call, or manage persistence themselves on the
-    # returned DataFrame. List mutations are lock-guarded for
-    # concurrent jobs sharing one session.
-    release_candidate_caches()
-    pairs = pairs.persist()
-    with _cache_lock:
-        _live_candidate_caches.append(pairs)
+    # returned DataFrame.
+    keep = pins.held(_CANDIDATES)
+    pairs = keep.persist(pairs)
     # Exact-Jaccard verification shingles are computed ONLY for docs
     # that appear in a candidate pair (semi-join filter first): at any
     # real threshold that is a vanishing fraction of the corpus.
@@ -576,15 +566,14 @@ def minhash_duplicate_pairs(df: DataFrame, text_col: str = "text",
     # from the staged pure-JVM Horner fold (same values as the Arrow
     # kernel; distinct set semantics, order irrelevant to
     # array_intersect/array_union) - no Python stage on this path.
-    sh = (df.join(cand_ids, id_col, "left_semi")
-          .select(F.col(id_col),
-                  token_hashes_col(F.col(text_col)).alias("_th"))
-          .select(F.col(id_col),
-                  F.array_distinct(
-                      _horner_window_fps(F.col("_th"), shingle_k))
-                  .alias("_sh"))).persist()
-    with _cache_lock:
-        _live_candidate_caches.append(sh)
+    sh = keep.persist(
+        df.join(cand_ids, id_col, "left_semi")
+        .select(F.col(id_col),
+                token_hashes_col(F.col(text_col)).alias("_th"))
+        .select(F.col(id_col),
+                F.array_distinct(
+                    _horner_window_fps(F.col("_th"), shingle_k))
+                .alias("_sh")))
     pairs = (pairs
              .join(sh.withColumnRenamed(id_col, "a")
                    .withColumnRenamed("_sh", "_sha"), "a")
@@ -597,31 +586,15 @@ def minhash_duplicate_pairs(df: DataFrame, text_col: str = "text",
 
 
 def _persistent_rdd_ids(sc) -> set:
-    """Ids of currently persisted RDDs (incl. localCheckpoint blocks)."""
+    """Ids of currently persisted RDDs (incl. localCheckpoint blocks).
+    A measuring helper for tests; pins are tracked by pins.Pins."""
     return {int(i) for i in
             sc._jsc.getPersistentRDDs().keySet().toArray()}
-
-
-def _release_rdds(sc, ids) -> None:
-    """Best-effort unpersist of persisted RDDs by id (no-op if gone)."""
-    m = sc._jsc.getPersistentRDDs()
-    for rid in ids:
-        rdd = m.get(rid)
-        if rdd is not None:
-            rdd.unpersist(False)
 
 
 # Rounds the last connected_components call took (test observability
 # for the O(log diameter) pointer-jumping claim).
 _last_cc_rounds: int = 0
-
-# One CC loop per SparkContext at a time: superseded-checkpoint
-# reclamation diffs the CONTEXT-WIDE persistent-RDD set, so a second
-# concurrent caller's localCheckpoint blocks would land in the diff and
-# be swept out from under a truncated lineage (job failure, not a
-# recompute). The lock makes the diff sound; dedup_survivors holds it
-# across its own checkpoint diff for the same reason.
-_cc_lock = threading.Lock()
 
 
 def connected_components(pairs: DataFrame, a_col: str = "a",
@@ -652,37 +625,23 @@ def connected_components(pairs: DataFrame, a_col: str = "a",
     bearing: an iterative plan MUST truncate lineage - persist() alone
     leaves Catalyst re-analyzing a plan that doubles per round and
     OOMs the driver around round ~12 (measured). Superseded rounds'
-    checkpoint blocks are released as the loop advances (persistent-
-    RDD id diff), so long-lived sessions don't accumulate one
-    materialized label set per round; the RETURNED frame keeps the
-    final round's blocks - unpersist it when done. `max_iter` is a
+    checkpoint blocks are released as the loop advances, so long-lived
+    sessions don't accumulate one materialized label set per round;
+    the RETURNED frame keeps the final round's blocks. `max_iter` is a
     backstop, not a truncation: hitting it raises rather than
     returning a wrong answer (with pointer jumping it implies
     diameter ~2^max_iter - not a real graph).
 
-    Concurrency: the loop holds `_cc_lock` (one CC traversal per
-    SparkContext at a time) because the reclamation diff above is
-    context-wide - a checkpoint persisted concurrently by another
-    thread would be swept. Other operators' caches are safe: the diff
-    only collects ids that appeared DURING this locked loop.
-
-    The returned blocks are also registered with the module so a
-    long-lived session that did not hand-unpersist every result can
-    sweep them all at a safe point via release_component_labels()
-    (the battery-twice hygiene test found exactly this creep).
+    The returned blocks are held for the caller until
+    release_component_labels(), which sweeps every returned frame at
+    a safe point (the battery-twice hygiene test found exactly this
+    creep). Concurrent calls are independent: each releases only the
+    blocks it pinned.
     """
-    with _cc_lock:
-        labels, live_ids = _connected_components_locked(
-            pairs, a_col, b_col, max_iter)
-        _cc_returned_ids.update(live_ids)
+    labels = _connected_components(pairs, a_col, b_col, max_iter,
+                                   pins.owned(_COMPONENT_LABELS))
     return labels.select(F.col("_n").alias(id_out),
                          F.col("_l").alias(comp_out))
-
-
-# Final-round label blocks handed out by public connected_components
-# calls (caller-owned by contract, but sweepable: sessions that keep
-# many results live release them in one place when done with ALL).
-_cc_returned_ids: set = set()
 
 
 def release_component_labels() -> None:
@@ -690,93 +649,79 @@ def release_component_labels() -> None:
     connected_components call has returned. Those frames become
     unusable (truncated lineage - the blocks ARE the data); call only
     when done with all of them."""
-    from pyspark import SparkContext
-    with _cc_lock:
-        sc = SparkContext._active_spark_context
-        if sc is not None and _cc_returned_ids:
-            _release_rdds(sc, set(_cc_returned_ids))
-        _cc_returned_ids.clear()
+    pins.release(_COMPONENT_LABELS)
 
 
-def _connected_components_locked(pairs: DataFrame, a_col: str,
-                                 b_col: str, max_iter: int):
-    """Body of connected_components. Caller MUST hold `_cc_lock`.
-
-    Returns (labels frame with columns (_n, _l), persistent-RDD ids of
-    the final round's localCheckpoint blocks) so internal callers
-    (dedup_survivors) can release the label blocks once they have
-    derived + materialized what they need from them.
-    """
+def _connected_components(pairs: DataFrame, a_col: str, b_col: str,
+                          max_iter: int, keep: Pins) -> DataFrame:
+    """Body of connected_components: returns the labels frame with
+    columns (_n, _l), whose final-round localCheckpoint blocks go to
+    `keep` - internal callers (dedup_survivors, the survivors stream)
+    release them once they have derived what they need."""
     global _last_cc_rounds
-    sc = pairs.sparkSession.sparkContext
-    base_ids = _persistent_rdd_ids(sc)
     edges = pairs.select(F.col(a_col).alias("_s"),
                          F.col(b_col).alias("_d"))
-    # eager=False (r7): both init frames register their blocks
-    # immediately (the RDD-id diffs below see them) but materialize
-    # inside round 1's single job instead of costing two extra
-    # driver-synchronous jobs up front - the CC loop's one-action-per-
-    # round discipline applied to its own initialization.
-    sym = edges.union(pairs.select(F.col(b_col).alias("_s"),
-                                   F.col(a_col).alias("_d"))) \
-        .localCheckpoint(eager=False)
-    sym_ids = _persistent_rdd_ids(sc) - base_ids
-    labels = (sym.select(F.col("_s").alias("_n")).distinct()
-              .withColumn("_l", F.col("_n"))
-              .localCheckpoint(eager=False))
-    live_ids = _persistent_rdd_ids(sc) - base_ids - sym_ids
     rounds = 0
-    try:
-        for rounds in range(1, max_iter + 1):
-            nb = (sym.join(labels.withColumnRenamed("_n", "_d")
-                           .withColumnRenamed("_l", "_nl"), "_d")
-                  .groupBy("_s").agg(F.min("_nl").alias("_nl")))
-            half = (labels.join(nb.withColumnRenamed("_s", "_n"),
-                                "_n", "left")
-                    .select("_n", F.col("_l").alias("_l0"),
-                            F.least(F.col("_l"),
-                                    F.coalesce("_nl", F.col("_l")))
-                            .alias("_l1")))
-            # pointer jump: labels are node ids -> look up the label's
-            # own label and take the min (halves label-chain lengths).
-            jump = labels.select(F.col("_n").alias("_l1"),
-                                 F.col("_l").alias("_l2"))
-            new = (half.join(jump, "_l1", "left")
-                   .select("_n",
-                           F.least(F.col("_l1"),
-                                   F.coalesce("_l2", F.col("_l1")))
-                           .alias("_l"),
-                           F.col("_l0"))
-                   .withColumn("_chg",
-                               (F.col("_l") != F.col("_l0"))
-                               .cast("long"))
-                   .select("_n", "_l", "_chg")
-                   .localCheckpoint(eager=False))
-            # ONE job: the agg materializes the lazy checkpoint AND
-            # returns the changed count from the same pass.
-            changed = int(new.agg(F.sum("_chg")).collect()[0][0] or 0)
-            seen = _persistent_rdd_ids(sc)
-            new_ids = seen - base_ids - sym_ids - live_ids
-            _release_rdds(sc, live_ids)  # superseded round's blocks
-            live_ids = new_ids
-            labels = new.drop("_chg")
-            if changed == 0:
-                break
-        else:
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} "
-                f"rounds - pathological chain graph?")
-    finally:
-        _release_rdds(sc, sym_ids)
-        _last_cc_rounds = rounds
-    return labels, live_ids
+    with Pins() as scratch, Pins() as live:
+        # eager=False (r7): both init frames materialize inside round
+        # 1's single job instead of costing two extra driver-
+        # synchronous jobs up front - the CC loop's one-action-per-
+        # round discipline applied to its own initialization.
+        sym = scratch.checkpoint(
+            edges.union(pairs.select(F.col(b_col).alias("_s"),
+                                     F.col(a_col).alias("_d"))))
+        labels = live.checkpoint(
+            sym.select(F.col("_s").alias("_n")).distinct()
+            .withColumn("_l", F.col("_n")))
+        try:
+            for rounds in range(1, max_iter + 1):
+                nb = (sym.join(labels.withColumnRenamed("_n", "_d")
+                               .withColumnRenamed("_l", "_nl"), "_d")
+                      .groupBy("_s").agg(F.min("_nl").alias("_nl")))
+                half = (labels.join(nb.withColumnRenamed("_s", "_n"),
+                                    "_n", "left")
+                        .select("_n", F.col("_l").alias("_l0"),
+                                F.least(F.col("_l"),
+                                        F.coalesce("_nl", F.col("_l")))
+                                .alias("_l1")))
+                # pointer jump: labels are node ids -> look up the
+                # label's own label and take the min (halves
+                # label-chain lengths).
+                jump = labels.select(F.col("_n").alias("_l1"),
+                                     F.col("_l").alias("_l2"))
+                with Pins() as nxt:
+                    new = nxt.checkpoint(
+                        half.join(jump, "_l1", "left")
+                        .select("_n",
+                                F.least(F.col("_l1"),
+                                        F.coalesce("_l2", F.col("_l1")))
+                                .alias("_l"),
+                                F.col("_l0"))
+                        .withColumn("_chg",
+                                    (F.col("_l") != F.col("_l0"))
+                                    .cast("long"))
+                        .select("_n", "_l", "_chg"))
+                    # ONE job: the agg materializes the lazy checkpoint
+                    # AND returns the changed count from the same pass.
+                    changed = int(new.agg(F.sum("_chg")).collect()[0][0]
+                                  or 0)
+                    live.release()  # superseded round's blocks
+                    live.adopt(nxt)
+                labels = new.drop("_chg")
+                if changed == 0:
+                    break
+            else:
+                raise RuntimeError(
+                    f"connected_components did not converge in "
+                    f"{max_iter} rounds - pathological chain graph?")
+        finally:
+            _last_cc_rounds = rounds
+        keep.adopt(live)
+    return labels
 
 
-# Drop-list checkpoint blocks pinned by the last dedup_survivors call
-# (bounded-cache contract: released automatically at the next call, or
-# explicitly via release_survivors_state). Which anti-join path the
-# last call took ("broadcast" | "shuffle") - test/bench observability.
-_survivors_live_ids: set = set()
+# Which anti-join path the last dedup_survivors call took
+# ("broadcast" | "shuffle") - test/bench observability.
 _last_survivors_path: str | None = None
 
 
@@ -800,12 +745,7 @@ def release_survivors_state() -> None:
     dedup_survivors call. The RETURNED survivors frame depends on those
     blocks (truncated lineage), so call this only when done with it -
     or let the next dedup_survivors call reclaim them."""
-    from pyspark import SparkContext
-    with _cc_lock:
-        sc = SparkContext._active_spark_context
-        if sc is not None and _survivors_live_ids:
-            _release_rdds(sc, set(_survivors_live_ids))
-        _survivors_live_ids.clear()
+    pins.release(_SURVIVORS)
 
 
 def dedup_survivors(docs: DataFrame, pairs: DataFrame,
@@ -851,12 +791,10 @@ def dedup_survivors(docs: DataFrame, pairs: DataFrame,
     only.
     """
     global _last_survivors_path
-    sc = docs.sparkSession.sparkContext
-    release_survivors_state()  # previous call's drop-list blocks
-    with _cc_lock:
-        comp, label_ids = _connected_components_locked(
-            pairs, a_col, b_col, max_iter)
-        before = _persistent_rdd_ids(sc)
+    keep = pins.held(_SURVIVORS)  # previous call's drop-list blocks
+    with Pins() as label_pins:
+        comp = _connected_components(pairs, a_col, b_col, max_iter,
+                                     label_pins)
         if quality_col is None:
             drop = (comp.filter(F.col("_n") != F.col("_l"))
                     .select(F.col("_n").alias(id_col)))
@@ -883,14 +821,12 @@ def dedup_survivors(docs: DataFrame, pairs: DataFrame,
             # eqNullSafe keeps every member, min id wins - the
             # desc_nulls_last tie-break).
             drop = _quality_drop(members, id_col)
-        drop = drop.localCheckpoint(eager=False)
+        drop = keep.checkpoint(drop)
         # ONE job materializes the lazy checkpoint AND counts it (the
         # gate statistic) - same fold-the-action trick as the CC loop.
+        # The labels are released on leaving the block: the drop list
+        # is materialized, nothing references them any more.
         n_drop = int(drop.count())
-        _survivors_live_ids.update(_persistent_rdd_ids(sc) - before)
-        # labels are no longer referenced by anything: the drop list is
-        # materialized. Release them here, not at session end.
-        _release_rdds(sc, label_ids)
     if n_drop <= broadcast_max_rows:
         _last_survivors_path = "broadcast"
         return docs.join(F.broadcast(drop), id_col, "left_anti")
@@ -1224,26 +1160,11 @@ def _cut_token_positions(df: DataFrame, cov: DataFrame, text_col: str,
             .drop("_rm", "_ss_nt", "_tk", "_kp"))
 
 
-# decontaminate's contaminated-id frames are eagerly localCheckpointed
-# (lineage truncated - the benchmark blocks are released before
-# returning, so the ids must not be recomputable-from-them). Each call
-# releases the PREVIOUS call's blocks; release_decontaminate_state()
-# sweeps at session end. Separate registry from the survivors state:
-# a dedup_survivors call must not free a live decontaminate result.
-_decontaminate_live_ids: set = set()
-
-
 def release_decontaminate_state() -> None:
-    """Releases the contaminated-id checkpoint blocks of prior
-    decontaminate() calls (their results recompute nothing - consume
+    """Releases the contaminated-id checkpoint blocks of the last
+    decontaminate() call (its result recomputes nothing - consume
     before releasing)."""
-    with _cache_lock:
-        from pyspark.sql import SparkSession
-        spark = SparkSession.getActiveSession()
-        sc = spark.sparkContext if spark is not None else None
-        if sc is not None and _decontaminate_live_ids:
-            _release_rdds(sc, set(_decontaminate_live_ids))
-        _decontaminate_live_ids.clear()
+    pins.release(_DECONTAMINATE)
 
 
 def decontaminate(docs: DataFrame, benchmark: DataFrame,
@@ -1275,63 +1196,43 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame,
     contaminated-id frame's blocks are released at the next call or
     via release_decontaminate_state().
     """
-    sc = docs.sparkSession.sparkContext
-    release_decontaminate_state()  # previous call's id blocks
-    # BOTH persistent-RDD-id diff windows run under _cc_lock: the
-    # module invariant (see _cc_lock) is that context-wide checkpoint
-    # diffs are serialized - without it, a concurrent dedup_survivors
-    # call's drop-list blocks could land in bench_ids and be released
-    # here (killing that caller's truncated-lineage result), or this
-    # call's blocks could land in the other's sweep.
-    with _cc_lock:
-        # The `before` snapshot MUST precede the localCheckpoint mark:
-        # eager=False registers its persist id AT MARK TIME (probed on
-        # this Spark build), so a post-mark snapshot would put the
-        # bench block inside `before`, leave bench_ids empty, and leak
-        # the block past every release sweep until the ContextCleaner's
-        # nondeterministic GC found it (the storage-creep flake).
-        before = _persistent_rdd_ids(sc)
+    # The contaminated-id frame is eagerly localCheckpointed (lineage
+    # truncated: the benchmark blocks are released before returning,
+    # so the ids must not be recomputable from them). Its blocks are
+    # held until the next call; a separate owner from the survivors
+    # state, so a dedup_survivors call never frees a live
+    # decontaminate result.
+    keep = pins.held(_DECONTAMINATE)  # previous call's id blocks
+    with Pins() as scratch:
         # Staged pure-JVM fingerprints (r7, see _horner_window_fps);
         # per-row array_distinct is skipped on BOTH sides - the bench
         # side global-distincts the exploded rows and the docs side
         # only feeds a left-semi + distinct(id), so per-row duplicate
         # fingerprints cannot change either result.
-        bench = (benchmark
-                 .select(token_hashes_col(
-                     F.lower(F.col(bench_text_col))).alias("_th"))
-                 .select(_horner_window_fps(F.col("_th"), window)
-                         .alias("_fp"))
-                 .select(F.explode_outer("_fp").alias("_f"))
-                 .filter(F.col("_f").isNotNull())
-                 .distinct()
-                 .localCheckpoint(eager=False))
+        bench = scratch.checkpoint(
+            benchmark
+            .select(token_hashes_col(
+                F.lower(F.col(bench_text_col))).alias("_th"))
+            .select(_horner_window_fps(F.col("_th"), window)
+                    .alias("_fp"))
+            .select(F.explode_outer("_fp").alias("_f"))
+            .filter(F.col("_f").isNotNull())
+            .distinct())
         n_bench = int(bench.count())
-        bench_ids = _persistent_rdd_ids(sc) - before
-        try:
-            exploded = (_spread(docs, spread)
-                        .select(F.col(id_col),
-                                token_hashes_col(
-                                    F.lower(F.col(text_col)))
-                                .alias("_th"))
-                        .select(id_col,
-                                _horner_window_fps(F.col("_th"),
-                                                   window)
-                                .alias("_fp"))
-                        .select(id_col,
-                                F.explode_outer("_fp").alias("_f"))
-                        .filter(F.col("_f").isNotNull()))
-            rhs = F.broadcast(bench) if n_bench <= broadcast_max_rows \
-                else bench
-            pre = _persistent_rdd_ids(sc)
-            bad = (exploded.join(rhs, "_f", "left_semi")
-                   .select(id_col).distinct()
-                   .localCheckpoint(eager=True))
-            with _cache_lock:
-                _decontaminate_live_ids.update(
-                    _persistent_rdd_ids(sc) - pre - bench_ids)
-            return docs.join(bad, id_col, "left_anti")
-        finally:
-            _release_rdds(sc, bench_ids)
+        exploded = (_spread(docs, spread)
+                    .select(F.col(id_col),
+                            token_hashes_col(F.lower(F.col(text_col)))
+                            .alias("_th"))
+                    .select(id_col,
+                            _horner_window_fps(F.col("_th"), window)
+                            .alias("_fp"))
+                    .select(id_col, F.explode_outer("_fp").alias("_f"))
+                    .filter(F.col("_f").isNotNull()))
+        rhs = F.broadcast(bench) if n_bench <= broadcast_max_rows \
+            else bench
+        bad = keep.checkpoint(exploded.join(rhs, "_f", "left_semi")
+                              .select(id_col).distinct(), eager=True)
+    return docs.join(bad, id_col, "left_anti")
 
 
 def _block_combo_masks(blocks: int, block_t: int) -> list[int]:

@@ -31,6 +31,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
 from geeflow_spark.operators.spatial_join import INDEXES, with_cell
+from geeflow_spark.pins import Pins
 
 EARTH_RADIUS_M = 6371010.0
 
@@ -95,120 +96,115 @@ def knn(queries: DataFrame, data: DataFrame, k: int, level: int = 7,
     candidate pruning beats a full pass (identical output either way;
     both paths are exact with the same tiebreak).
     """
-    spark = queries.sparkSession
-    q = with_cell(queries.select(query_id, "lat", "lon"), level,
-                  out_col="qcell", index=index).cache()
-    d = with_cell(data.select(data_id, "lat", "lon"), level,
-                  index=index) \
-        .withColumnRenamed("lat", "dlat").withColumnRenamed("lon", "dlon")
-    d = d.repartition(F.col("cell")).cache()
-    n_data = d.count()
-    if n_data <= brute_force_threshold:
-        out = knn_brute_force(q.drop("qcell"), d.select(
-            data_id, F.col("dlat").alias("lat"),
-            F.col("dlon").alias("lon")), k, query_id, data_id).cache()
-        out.count()
-        q.unpersist()
-        d.unpersist()
-        return out
+    # q, d and the per-round top-k are call-scoped pins; the returned
+    # frame is cached for the caller and outlives them.
+    with Pins() as scratch:
+        q = scratch.persist(with_cell(
+            queries.select(query_id, "lat", "lon"), level,
+            out_col="qcell", index=index))
+        d = with_cell(data.select(data_id, "lat", "lon"), level,
+                      index=index) \
+            .withColumnRenamed("lat", "dlat") \
+            .withColumnRenamed("lon", "dlon")
+        d = scratch.persist(d.repartition(F.col("cell")))
+        n_data = d.count()
+        if n_data <= brute_force_threshold:
+            out = knn_brute_force(q.drop("qcell"), d.select(
+                data_id, F.col("dlat").alias("lat"),
+                F.col("dlon").alias("lon")), k, query_id, data_id).cache()
+            out.count()
+            return out
 
-    results = None
-    remaining = q
-    # Driver-side remaining counter replaces a per-round isEmpty probe
-    # (which re-evaluated the whole candidate pipeline as its own job).
-    n_remaining = q.count()
-    round_caches = []
-    r = 2  # bound is (r-1)*minWidth, so r=1 can never certify completeness
-    while r <= max_ring and n_remaining > 0:
-        # One candidate-pipeline evaluation per round: the round's top-k
-        # (<= n_remaining * k id-sized rows) is the thing cached, and the
-        # done-id bookkeeping, the result union, AND the next round's
-        # anti-join all read that cache. (Caching done_ids instead - the
-        # r3 shape - left the result join re-running the candidate
-        # pipeline per round at the final materialize: +31% on the gate
-        # bench.)
-        # Ring-explosion cost gate: a round explodes (2r+1)^2 (s2 block)
-        # or 3r(r+1)+1 (hex disk) cells per unfinished query - once that
-        # fan-out exceeds the data-side row count, one brute-force pass
-        # over the stragglers is strictly cheaper than the join probes
-        # alone (sparse-data pathology: k unsatisfiable until huge r).
-        ring_cells = (2 * r + 1) ** 2 if index == "s2" \
-            else 3 * r * (r + 1) + 1
-        if ring_cells > n_data:
-            break
-        cand = (remaining
-                .withColumn("_bound",
-                            ring_bound_udf(level, r, index)(F.col("qcell")))
-                .withColumn("cell", F.explode(
-                    ring_cells_udf(level, r, index)(F.col("qcell"))))
-                .join(d, "cell", "inner")
-                .select(query_id, "lat", "lon", "_bound",
-                        data_id, "dlat", "dlon"))
-        cand = cand.withColumn(
-            "dist_m", haversine_m(F.col("lat"), F.col("lon"),
-                                  F.col("dlat"), F.col("dlon")))
-        w = Window.partitionBy(query_id).orderBy(F.col("dist_m").asc(),
-                                                 F.col(data_id).asc())
-        topk = (cand.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)).cache()
-        round_caches.append(topk)
-        done_ids = (topk.groupBy(query_id)
-                    .agg(F.count("*").alias("_n"),
-                         F.max("dist_m").alias("_dk"),
-                         F.first("_bound").alias("_b"))
-                    .filter((F.col("_n") >= k) &
-                            (F.col("_dk") <= F.col("_b")))
-                    .select(query_id))
-        n_done = done_ids.count()  # materializes the topk cache
-        if n_done == n_remaining:
-            # Every unfinished query certified this round (the common
-            # terminal case): skip the done-id join entirely.
-            done = topk.select(query_id, data_id, "dist_m", "rank")
-            results = done if results is None \
-                else results.unionByName(done)
-            n_remaining = 0
-        elif n_done:
-            done = topk.join(F.broadcast(done_ids), query_id, "inner") \
-                       .select(query_id, data_id, "dist_m", "rank")
-            results = done if results is None \
-                else results.unionByName(done)
-            remaining = remaining.join(done_ids, query_id, "left_anti")
-            n_remaining -= n_done
-        r *= 2
+        results = None
+        remaining = q
+        # Driver-side remaining counter replaces a per-round isEmpty probe
+        # (which re-evaluated the whole candidate pipeline as its own job).
+        n_remaining = q.count()
+        r = 2  # bound is (r-1)*minWidth, so r=1 can never certify completeness
+        while r <= max_ring and n_remaining > 0:
+            # One candidate-pipeline evaluation per round: the round's top-k
+            # (<= n_remaining * k id-sized rows) is the thing cached, and the
+            # done-id bookkeeping, the result union, AND the next round's
+            # anti-join all read that cache. (Caching done_ids instead - the
+            # r3 shape - left the result join re-running the candidate
+            # pipeline per round at the final materialize: +31% on the gate
+            # bench.)
+            # Ring-explosion cost gate: a round explodes (2r+1)^2 (s2 block)
+            # or 3r(r+1)+1 (hex disk) cells per unfinished query - once that
+            # fan-out exceeds the data-side row count, one brute-force pass
+            # over the stragglers is strictly cheaper than the join probes
+            # alone (sparse-data pathology: k unsatisfiable until huge r).
+            ring_cells = (2 * r + 1) ** 2 if index == "s2" \
+                else 3 * r * (r + 1) + 1
+            if ring_cells > n_data:
+                break
+            cand = (remaining
+                    .withColumn("_bound", ring_bound_udf(level, r, index)
+                                (F.col("qcell")))
+                    .withColumn("cell", F.explode(
+                        ring_cells_udf(level, r, index)(F.col("qcell"))))
+                    .join(d, "cell", "inner")
+                    .select(query_id, "lat", "lon", "_bound",
+                            data_id, "dlat", "dlon"))
+            cand = cand.withColumn(
+                "dist_m", haversine_m(F.col("lat"), F.col("lon"),
+                                      F.col("dlat"), F.col("dlon")))
+            w = Window.partitionBy(query_id).orderBy(F.col("dist_m").asc(),
+                                                     F.col(data_id).asc())
+            topk = scratch.persist(cand.withColumn("rank",
+                                                   F.row_number().over(w))
+                                   .filter(F.col("rank") <= k))
+            done_ids = (topk.groupBy(query_id)
+                        .agg(F.count("*").alias("_n"),
+                             F.max("dist_m").alias("_dk"),
+                             F.first("_bound").alias("_b"))
+                        .filter((F.col("_n") >= k) &
+                                (F.col("_dk") <= F.col("_b")))
+                        .select(query_id))
+            n_done = done_ids.count()  # materializes the topk cache
+            if n_done == n_remaining:
+                # Every unfinished query certified this round (the common
+                # terminal case): skip the done-id join entirely.
+                done = topk.select(query_id, data_id, "dist_m", "rank")
+                results = done if results is None \
+                    else results.unionByName(done)
+                n_remaining = 0
+            elif n_done:
+                done = topk.join(F.broadcast(done_ids), query_id, "inner") \
+                           .select(query_id, data_id, "dist_m", "rank")
+                results = done if results is None \
+                    else results.unionByName(done)
+                remaining = remaining.join(done_ids, query_id, "left_anti")
+                n_remaining -= n_done
+            r *= 2
 
-    if n_remaining > 0:
-        # Brute-force fallback: exact, used only for stragglers.
-        cand = (remaining.crossJoin(d.select(data_id, "dlat", "dlon"))
-                .withColumn("dist_m",
-                            haversine_m(F.col("lat"), F.col("lon"),
-                                        F.col("dlat"), F.col("dlon"))))
-        w = Window.partitionBy(query_id).orderBy(F.col("dist_m").asc(),
-                                                 F.col(data_id).asc())
-        bf = (cand.withColumn("rank", F.row_number().over(w))
-              .filter(F.col("rank") <= k)
-              .select(query_id, data_id, "dist_m", "rank"))
-        results = bf if results is None else results.unionByName(bf)
-    if results is None:
-        # Empty query side: the ring loop and the brute-force fallback
-        # were both skipped. Return an empty frame with the contract
-        # schema (types derived from the inputs, same as every path).
-        empty = knn_brute_force(
-            q.drop("qcell").limit(0),
-            d.select(data_id, F.col("dlat").alias("lat"),
-                     F.col("dlon").alias("lon")), k, query_id, data_id)
-        out = empty.cache()
+        if n_remaining > 0:
+            # Brute-force fallback: exact, used only for stragglers.
+            cand = (remaining.crossJoin(d.select(data_id, "dlat", "dlon"))
+                    .withColumn("dist_m",
+                                haversine_m(F.col("lat"), F.col("lon"),
+                                            F.col("dlat"), F.col("dlon"))))
+            w = Window.partitionBy(query_id).orderBy(F.col("dist_m").asc(),
+                                                     F.col(data_id).asc())
+            bf = (cand.withColumn("rank", F.row_number().over(w))
+                  .filter(F.col("rank") <= k)
+                  .select(query_id, data_id, "dist_m", "rank"))
+            results = bf if results is None else results.unionByName(bf)
+        if results is None:
+            # Empty query side: the ring loop and the brute-force fallback
+            # were both skipped. Return an empty frame with the contract
+            # schema (types derived from the inputs, same as every path).
+            empty = knn_brute_force(
+                q.drop("qcell").limit(0),
+                d.select(data_id, F.col("dlat").alias("lat"),
+                         F.col("dlon").alias("lon")), k, query_id, data_id)
+            out = empty.cache()
+            out.count()
+            return out
+        # Materialize before releasing the cached inputs the plan references.
+        out = results.cache()
         out.count()
-        q.unpersist()
-        d.unpersist()
         return out
-    # Materialize before releasing the cached inputs the plan references.
-    out = results.cache()
-    out.count()
-    for c in round_caches:
-        c.unpersist()
-    q.unpersist()
-    d.unpersist()
-    return out
 
 
 def knn_brute_force(queries: DataFrame, data: DataFrame, k: int,

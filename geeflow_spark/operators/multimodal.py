@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, BinaryType, FloatType,
                                IntegerType, LongType, StringType,
@@ -37,26 +37,6 @@ MEDIA_SCHEMA = StructType([
     StructField("sample_rate", IntegerType()),
     StructField("n_frames", IntegerType()),
 ])
-
-
-def synth_media(spark: SparkSession, n: int) -> DataFrame:
-    """Deterministic media side-table matching synth.docs media_refs."""
-    df = spark.range(0, n, 1, max(4, n // 250_000 or 4))
-    idc = F.col("id")
-    payload = F.sha2(idc.cast("string"), 256).cast("binary")
-    return df.select(
-        F.concat(F.lit("media/"), F.format_string("%012d", idc),
-                 F.lit("/1")).alias("media_ref"),
-        F.when(idc % 3 == 0, "image").when(idc % 3 == 1, "audio")
-         .otherwise("video").alias("kind"),
-        payload.alias("payload"),
-        (idc % 64 + 16).cast("int").alias("width"),
-        (idc % 48 + 16).cast("int").alias("height"),
-        F.when(idc % 3 == 1, 16000).otherwise(0).cast("int")
-         .alias("sample_rate"),
-        F.when(idc % 3 == 2, (idc % 30 + 2)).otherwise(1).cast("int")
-         .alias("n_frames"),
-    )
 
 
 def _fake_pixels(payload: bytes, h: int, w: int, c: int = 3) -> np.ndarray:

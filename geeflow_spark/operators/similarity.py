@@ -21,8 +21,6 @@ Large-pipeline first-class operators (not in the reference):
 
 from __future__ import annotations
 
-import threading
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -30,8 +28,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
+from geeflow_spark import pins
+from geeflow_spark.pins import Pins
 
-_ivf_lock = threading.Lock()
+# Owners of the pins that outlive a call (geeflow_spark/pins.py).
+_PROBE = "similarity.probe"
+_SESSION_INDEX = "similarity.session_index"
 
 
 # Unrolling gates, set empirically. The unrolled tree's fixed
@@ -363,11 +365,6 @@ def _probe_udf(centroids: np.ndarray, nprobe: int):
     return _probe
 
 
-def ivf_centroid_udfs(centroids: np.ndarray, nprobe: int):
-    """(assign_udf, probe_udf) - kept for API compatibility."""
-    return _assign_udf(centroids), _probe_udf(centroids, nprobe)
-
-
 class IVFIndex:
     """Built IVF index: coarse quantizer + materialized inverted lists.
 
@@ -393,10 +390,10 @@ class IVFIndex:
         self.path = path
         self.vec_col = vec_col  # vector column stored in lists, or None
         self.quantized = quantized  # lists hold SQ8 (qvec, qscale)
+        self.pins = Pins()  # the session cache of `lists`, if any
 
     def release(self) -> None:
-        if self.path is None:
-            self.lists.unpersist(blocking=False)
+        self.pins.release()
 
 
 def ivf_build(data: DataFrame, n_centroids: int = 64,
@@ -462,14 +459,17 @@ def ivf_build(data: DataFrame, n_centroids: int = 64,
          .write.mode("overwrite").partitionBy("_c").parquet(path))
         lists = data.sparkSession.read.parquet(path)
     else:
+        lists = assigned
+    index = IVFIndex(centroids, lists, data_id, path,
+                     vec_col if (store_vectors and not quantize)
+                     else None, quantized=quantize)
+    if path is None:
         # Lazy persist (r7): the first probe action materializes the
         # assignment inside its own job - an eager count() here only
         # added a driver-synchronous job per build with no reuse
         # benefit (every consumer reads the same cache either way).
-        lists = assigned.persist()
-    return IVFIndex(centroids, lists, data_id, path,
-                    vec_col if (store_vectors and not quantize)
-                    else None, quantized=quantize)
+        index.lists = index.pins.persist(lists)
+    return index
 
 
 def ivf_probe(queries: DataFrame, index: IVFIndex,
@@ -509,18 +509,7 @@ def ivf_probe(queries: DataFrame, index: IVFIndex,
     # centroid set, bounded by n_centroids). Block lifetime follows
     # the candidate-cache contract: each probe releases the previous
     # probe's pin; release_probe_state() sweeps at session end.
-    from geeflow_spark.operators.dedup import (_cc_lock,
-                                               _persistent_rdd_ids)
-    release_probe_state()
-    sc = queries.sparkSession.sparkContext
-    # the id diff runs under dedup's _cc_lock - the module-family
-    # invariant that context-wide checkpoint diffs are serialized
-    # (a concurrent dedup caller's blocks must not land in this pin).
-    with _cc_lock:
-        before = _persistent_rdd_ids(sc)
-        qb = qb.localCheckpoint(eager=True)
-        with _ivf_lock:
-            _probe_pin_ids.update(_persistent_rdd_ids(sc) - before)
+    qb = pins.held(_PROBE).checkpoint(qb, eager=True)
     probed = sorted(r["_c"]
                     for r in qb.select("_c").distinct().collect())
     lists = index.lists.filter(F.col("_c").isin(probed)) \
@@ -605,38 +594,20 @@ def ivf_topk(queries: DataFrame, data: DataFrame, k: int,
     PREVIOUS call is released on the next call (same bounded-cache
     contract as dedup.minhash_duplicate_pairs).
     """
-    global _live_ivf_index
     idx = ivf_build(data, n_centroids, train_rows, iters, seed,
                     data_id, vec_col, quantize=quantize)
-    with _ivf_lock:
-        if _live_ivf_index is not None:
-            _live_ivf_index.release()
-        _live_ivf_index = idx
+    pins.held(_SESSION_INDEX).adopt(idx.pins)
     return ivf_probe(queries, idx, data, k, nprobe, query_id, data_id,
                      vec_col)
 
 
-_live_ivf_index: IVFIndex | None = None
-
-# qb pins from ivf_probe (one eager localCheckpoint per probe; each
-# call releases the previous call's pin - same contract as the dedup
-# candidate caches). Results returned by a probe stay correct after
-# release but lose the single-evaluation guarantee on recompute, so
-# consume each probe result before the next probe call.
-_probe_pin_ids: set = set()
-
-
 def release_probe_state() -> None:
     """Releases the query-side probe checkpoint of the previous
-    ivf_probe call (no-op when none is live)."""
-    from pyspark import SparkContext
-
-    from geeflow_spark.operators.dedup import _release_rdds
-    with _ivf_lock:
-        sc = SparkContext._active_spark_context
-        if sc is not None and _probe_pin_ids:
-            _release_rdds(sc, set(_probe_pin_ids))
-        _probe_pin_ids.clear()
+    ivf_probe call (no-op when none is live). A probe result stays
+    correct after release but loses the single-evaluation guarantee
+    on recompute, so consume each probe result before the next probe
+    call."""
+    pins.release(_PROBE)
 
 
 def release_session_index() -> None:
@@ -644,11 +615,7 @@ def release_session_index() -> None:
     call (bounded-cache contract); no-op when none is live. Benchmarks
     call this so a prior ANN query's cached lists can't occupy executor
     memory during an unrelated measurement."""
-    global _live_ivf_index
-    with _ivf_lock:
-        if _live_ivf_index is not None:
-            _live_ivf_index.release()
-            _live_ivf_index = None
+    pins.release(_SESSION_INDEX)
 
 
 def lsh_topk(queries: DataFrame, data: DataFrame, k: int, dim: int,

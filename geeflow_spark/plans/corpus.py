@@ -56,11 +56,11 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import threading
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geeflow_spark import pins
 from geeflow_spark.operators import chunking, dedup, sampling
 from geeflow_spark.operators import text_metrics
 
@@ -81,13 +81,12 @@ _STEP_ORDER = ("sample", "clean", "quality", "dedup", "substrings",
 # pin instead of the text pipeline).
 _MULTI_REF_TEXT_STEPS = ("dedup", "substrings", "decontaminate")
 
-# Mid-chain pins of the LAST build_corpus_pipeline call. Same bounded
-# lifetime as dedup's candidate caches: each call releases the
-# previous call's pins (a long-lived session holds at most one set),
-# so no bench/oracle run can ever read blocks materialized by a
+# Owner of the mid-chain pins of the LAST build_corpus_pipeline call.
+# Same bounded lifetime as dedup's candidate caches: each call releases
+# the previous call's pins (a long-lived session holds at most one
+# set), so no bench/oracle run can ever read blocks materialized by a
 # PREVIOUS run - every invocation recomputes from its inputs.
-_live_pipeline_caches: list = []
-_pin_lock = threading.Lock()
+_PIPELINE = "corpus.pipeline"
 
 
 def release_pipeline_caches() -> None:
@@ -95,9 +94,7 @@ def release_pipeline_caches() -> None:
     build_corpus_pipeline call (no-op when none are live). The frame
     that call returned stays correct afterwards but recomputes per
     action."""
-    with _pin_lock:
-        while _live_pipeline_caches:
-            _live_pipeline_caches.pop().unpersist(blocking=False)
+    pins.release(_PIPELINE)
 
 
 def _validate(cfg: dict, benchmark) -> None:
@@ -214,7 +211,7 @@ def build_corpus_pipeline(docs: DataFrame, cfg: dict,
     the `benchmark` frame.
     """
     _validate(cfg, benchmark)
-    release_pipeline_caches()  # previous call's pins
+    keep = pins.held(_PIPELINE)  # previous call's pins
     present = [s for s in _STEP_ORDER if s in cfg]
     # Pin the input of the first multi-reference text step and of the
     # shuffle step - but only when earlier steps exist (re-deriving a
@@ -254,9 +251,7 @@ def build_corpus_pipeline(docs: DataFrame, cfg: dict,
         if name not in cfg:
             continue
         if name in pin_before:
-            out = out.persist()
-            with _pin_lock:
-                _live_pipeline_caches.append(out)
+            out = keep.persist(out)
         out = _apply_step(out, name, cfg[name], benchmark=benchmark,
                           text_col=text_col, id_col=id_col,
                           hash_family=hash_family, mixed=mixed,

@@ -25,9 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (BooleanType, DoubleType, IntegerType,
-                               LongType, StringType, StructField,
-                               StructType)
+from pyspark.sql.types import (DoubleType, IntegerType, LongType,
+                               StringType, StructField, StructType)
 
 from geeflow_spark.functions import coords as coords_lib
 from geeflow_spark.functions import utm as utm_lib
@@ -61,57 +60,6 @@ def tile_udf(cell_size: float, width: int, height: int | None = None,
         return pd.DataFrame({"utm_zone": zone, "tile_x": x0, "tile_y": y0})
 
     return _tile
-
-
-def fused_geo_udf(regions: pd.DataFrame, cell_size: float, width: int,
-                  split_level: int, ring_col: str = "ring",
-                  id_col: str = "region_id"):
-    """(lat, lon, region_id) -> struct(inside, utm_zone, tile_x, tile_y,
-    split_cell) in ONE Arrow round-trip.
-
-    Fusing PIP refine + UTM tile origin + split-cell encode into a single
-    pandas UDF matters at scale: each separate UDF stage is a full
-    Arrow serialize/deserialize pass over the joined rows, and that pipe
-    traffic is memory-bandwidth-bound - it stops scaling with cores long
-    before the numpy compute does (measured on this box: fused path
-    scales ~3x from 8->32 cores, split path ~1.2x).
-    """
-    from geeflow_spark.functions import geometry, s2
-    from geeflow_spark.functions import utm as utm_lib
-
-    rings = {int(r[id_col]): np.asarray(r[ring_col], dtype=np.float64)
-             for _, r in regions.iterrows()}
-    schema = StructType([
-        StructField("inside", BooleanType()),
-        StructField("utm_zone", StringType()),
-        StructField("tile_x", DoubleType()),
-        StructField("tile_y", DoubleType()),
-        StructField("split_cell", LongType()),
-    ])
-
-    @pandas_udf(schema)
-    def _fused(lat: pd.Series, lon: pd.Series,
-               rid: pd.Series) -> pd.DataFrame:
-        la = lat.to_numpy(np.float64)
-        lo = lon.to_numpy(np.float64)
-        rid_np = rid.to_numpy(np.int64)
-        inside = np.zeros(len(la), dtype=bool)
-        for r in np.unique(rid_np):
-            ring = rings.get(int(r))
-            if ring is None:
-                continue
-            m = rid_np == r
-            inside[m] = geometry.points_in_polygon(lo[m], la[m], ring)
-        e, n, zn, zl = utm_lib.from_latlon(la, lo)
-        x0 = np.round((e - cell_size * width / 2.0) / cell_size) * cell_size
-        y0 = np.round((n - cell_size * width / 2.0) / cell_size) * cell_size
-        zone = pd.Series(zn).astype(str) + pd.Series(zl).astype(str)
-        cells = s2.latlon_to_cell_id(la, lo, split_level).astype(np.int64)
-        return pd.DataFrame({"inside": inside, "utm_zone": zone,
-                             "tile_x": x0, "tile_y": y0,
-                             "split_cell": cells})
-
-    return _fused
 
 
 def generate_examples(docs: DataFrame, regions: pd.DataFrame, *,
@@ -299,13 +247,3 @@ def generate_examples(docs: DataFrame, regions: pd.DataFrame, *,
             .drop("split_cell")
             .select(*doc_cols, "region_id", *keep,
                     "utm_zone", "tile_x", "tile_y", "split"))
-
-
-def first_region_per_doc(examples: DataFrame) -> DataFrame:
-    """fc_get semantics on the flagship output: first (min region_id)
-    region per document, payload columns carried through."""
-    return spatial_join.first_match(
-        examples,
-        key_cols=["doc_id"],
-        order_col="region_id",
-        payload_cols=["gridcode", "class_name"])

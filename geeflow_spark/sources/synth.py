@@ -86,24 +86,6 @@ def uniform_np(ids: np.ndarray, salt: int) -> np.ndarray:
     return (mixed >> np.uint64(11)).astype(np.float64) / float(1 << 53)
 
 
-def doc_latlon_np(ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Numpy mirror of the docs() lat/lon derivation (oracle side)."""
-    u_pick = uniform_np(ids, 1)
-    u_lat = uniform_np(ids, 2)
-    u_lon = uniform_np(ids, 3)
-    n_lat = uniform_np(ids, 4)
-    n_lon = uniform_np(ids, 5)
-    cluster_i = (uniform_np(ids, 6) * len(CITY_CLUSTERS)).astype(np.int64)
-    clat = np.array([c[0] for c in CITY_CLUSTERS])[cluster_i]
-    clon = np.array([c[1] for c in CITY_CLUSTERS])[cluster_i]
-    # triangular-ish cluster spread from two uniforms (cheap, deterministic)
-    dlat = (n_lat - 0.5) * 2 * CLUSTER_STD_DEG
-    dlon = (n_lon - 0.5) * 2 * CLUSTER_STD_DEG
-    lat = np.where(u_pick < 0.3, clat + dlat, -60.0 + u_lat * 132.0)
-    lon = np.where(u_pick < 0.3, clon + dlon, -180.0 + u_lon * 360.0)
-    return lat, lon
-
-
 def docs(spark: SparkSession, n: int, n_partitions: int | None = None
          ) -> DataFrame:
     """Interleaved text+media document table with point geometry."""

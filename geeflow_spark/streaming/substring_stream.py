@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geeflow_spark.operators import dedup
+from geeflow_spark.pins import Pins
 
 
 def substring_foreach_batch(state_dir: str, out_dir: str,
@@ -68,20 +69,12 @@ def substring_foreach_batch(state_dir: str, out_dir: str,
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        sc = spark.sparkContext
-        # one Arrow fingerprint pass, materialized: consumed by the
-        # cut pipeline AND the state write (without the checkpoint the
-        # UDF would run twice per batch). The id-diff window runs
-        # under the module _cc_lock (context-wide persistent-RDD diffs
-        # must be serialized - the survivors-stream invariant), and
-        # the blocks are released by id (DataFrame.unpersist does not
-        # reach localCheckpoint blocks).
-        with dedup._cc_lock:
-            before = dedup._persistent_rdd_ids(sc)
-            occ = dedup._window_occurrences(
-                batch_df, window, text_col, id_col).localCheckpoint()
-            occ_ids = dedup._persistent_rdd_ids(sc) - before
-        try:
+        # one fingerprint pass, materialized: consumed by the cut
+        # pipeline AND the state write (without the checkpoint it
+        # would run twice per batch); released when the batch ends.
+        with Pins() as scratch:
+            occ = scratch.checkpoint(dedup._window_occurrences(
+                batch_df, window, text_col, id_col), eager=True)
             # state read: everything EARLIER batches committed. The
             # exclusion of this batch's own partition makes the whole
             # body idempotent under foreachBatch's at-least-once
@@ -131,8 +124,6 @@ def substring_foreach_batch(state_dir: str, out_dir: str,
              .join(seen, "_f", "left_anti")
              .write.mode("overwrite")
              .parquet(f"{state_dir}/batch_id={batch_id}"))
-        finally:
-            dedup._release_rdds(sc, occ_ids)
 
     return process
 

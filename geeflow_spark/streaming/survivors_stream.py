@@ -51,12 +51,12 @@ bridge case).
 
 from __future__ import annotations
 
-
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from geeflow_spark.operators import dedup
+from geeflow_spark.pins import Pins
 
 
 def _pairs_vs_state(sigs_all: DataFrame, id_col: str, blocks: int,
@@ -111,24 +111,18 @@ def survivors_foreach_batch(state_dir: str, out_dir: str,
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        sc = spark.sparkContext
-        # BOTH block-accounting windows run under _cc_lock (the
-        # module invariant: context-wide persistent-RDD diffs must be
-        # serialized - unlocked, a concurrent dedup_survivors /
-        # decontaminate call's blocks could land in this batch's diff
-        # and be released below, killing that caller's result). The
-        # CC ids come straight from the locked internal API instead
-        # of a global diff around the public call.
-        with dedup._cc_lock:
-            before = dedup._persistent_rdd_ids(sc)
+        # This batch's signature checkpoint and component labels are
+        # released when the batch ends - only its own blocks, so a
+        # session holding other CC results alongside the stream is
+        # safe.
+        with Pins() as scratch:
             # One signature pass per batch, materialized: consumed by
             # the pair join, the survivor anti-join, and the state
             # append.
-            sigs_new = (batch_df
-                        .select(F.col(id_col), sim(F.col(text_col))
-                                .alias("_h"))
-                        .localCheckpoint())
-            sig_ids = dedup._persistent_rdd_ids(sc) - before
+            sigs_new = scratch.checkpoint(
+                batch_df.select(F.col(id_col),
+                                sim(F.col(text_col)).alias("_h")),
+                eager=True)
             # state = earlier batches' signatures; excluding this
             # batch's own partition makes the body idempotent under
             # foreachBatch replay (a half-committed replayed batch
@@ -145,41 +139,38 @@ def survivors_foreach_batch(state_dir: str, out_dir: str,
                                                      F.lit(False))))
             pairs = _pairs_vs_state(sigs_all, id_col, blocks, block_t,
                                     max_hamming)
-            labels, cc_ids = dedup._connected_components_locked(
-                pairs, "a", "b", 50)
-        comp = labels.select(F.col("_n").alias("id"),
-                             F.col("_l").alias("component"))
-        # components containing ANY previously-seen doc already have a
-        # committed survivor - every batch member of those drops; in
-        # fresh components the canonical min-id member survives
-        # (component label == min member id by construction).
-        seen_comps = (comp.join(seen.select(F.col(id_col).alias("id")),
-                                "id").select("component").distinct())
-        members_new = comp.join(
-            sigs_new.select(F.col(id_col).alias("id")), "id")
-        drop = (members_new.join(seen_comps, "component", "left_semi")
-                .select("id")
-                .unionByName(members_new
-                             .filter(F.col("id") != F.col("component"))
-                             .select("id"))
-                .distinct().withColumnRenamed("id", id_col))
-        survivors = batch_df.join(drop, id_col, "left_anti")
-        # Output FIRST (it consumes the component checkpoint blocks),
-        # then the state append, then release this batch's CC blocks.
-        # idempotent per-batch sinks (the streaming/ingest.py
-        # pattern): a replayed batch overwrites its own batch_id
-        # partition instead of appending duplicates
-        survivors.write.mode("overwrite") \
-            .parquet(f"{out_dir}/batch_id={batch_id}")
-        sigs_new.write.mode("overwrite") \
-            .parquet(f"{state_dir}/batch_id={batch_id}")
-        # Release ONLY this batch's blocks (the label set the locked
-        # CC call returned plus the signature checkpoint) - targeted
-        # ids, not the global release_component_labels() sweep, so a
-        # session holding other CC results alongside the stream is
-        # safe. (The internal API does not register in
-        # _cc_returned_ids, so there is nothing to deregister.)
-        dedup._release_rdds(sc, cc_ids | sig_ids)
+            labels = dedup._connected_components(pairs, "a", "b", 50,
+                                                 scratch)
+            comp = labels.select(F.col("_n").alias("id"),
+                                 F.col("_l").alias("component"))
+            # components containing ANY previously-seen doc already
+            # have a committed survivor - every batch member of those
+            # drops; in fresh components the canonical min-id member
+            # survives (component label == min member id by
+            # construction).
+            seen_comps = (comp.join(seen.select(F.col(id_col)
+                                                .alias("id")), "id")
+                          .select("component").distinct())
+            members_new = comp.join(
+                sigs_new.select(F.col(id_col).alias("id")), "id")
+            drop = (members_new.join(seen_comps, "component",
+                                     "left_semi")
+                    .select("id")
+                    .unionByName(members_new
+                                 .filter(F.col("id")
+                                         != F.col("component"))
+                                 .select("id"))
+                    .distinct().withColumnRenamed("id", id_col))
+            survivors = batch_df.join(drop, id_col, "left_anti")
+            # Output FIRST (it consumes the component checkpoint
+            # blocks), then the state append. idempotent per-batch
+            # sinks (the streaming/ingest.py pattern): a replayed
+            # batch overwrites its own batch_id partition instead of
+            # appending duplicates
+            survivors.write.mode("overwrite") \
+                .parquet(f"{out_dir}/batch_id={batch_id}")
+            sigs_new.write.mode("overwrite") \
+                .parquet(f"{state_dir}/batch_id={batch_id}")
 
     return process
 

@@ -296,6 +296,7 @@ def test_pipeline_pins_bounded_and_released(spark):
     # so no run can ever read blocks a previous run materialized.
     import time
 
+    from geeflow_spark import pins
     from geeflow_spark.operators import dedup
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     cfg = {
@@ -313,15 +314,13 @@ def test_pipeline_pins_bounded_and_released(spark):
     base = dedup._persistent_rdd_ids(spark.sparkContext)
     n1 = corpus.build_corpus_pipeline(docs, cfg, hash_family="md5") \
         .count()
-    with corpus._pin_lock:
-        # substrings input + shuffle input
-        assert len(corpus._live_pipeline_caches) == 2
+    # substrings input + shuffle input
+    assert len(pins.owned(corpus._PIPELINE)) == 2
     # the next call releases the previous call's pins and registers
     # its own - at most one live set per session (registry bounded)
     n2 = corpus.build_corpus_pipeline(docs, cfg, hash_family="md5") \
         .count()
-    with corpus._pin_lock:
-        assert len(corpus._live_pipeline_caches) == 2
+    assert len(pins.owned(corpus._PIPELINE)) == 2
     assert n2 == n1 > 0
     # the final release returns the persistent-RDD set to baseline
     corpus.release_pipeline_caches()

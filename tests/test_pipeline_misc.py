@@ -326,7 +326,7 @@ def test_connected_components_releases_checkpoints(spark):
     after = dedup._persistent_rdd_ids(sc) - before
     # only the final round's checkpoint may remain live (the result)
     assert len(after) <= 2, after
-    dedup._release_rdds(sc, after)
+    dedup.release_component_labels()
     assert not (dedup._persistent_rdd_ids(sc) - before)
 
 
